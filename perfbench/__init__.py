@@ -1,0 +1,5 @@
+"""crawlspark benchmark: crawl-round and corpus-prep workloads.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root. See run.py.
+"""
