@@ -276,7 +276,8 @@ def sql_frontier_pop() -> str:
 
 def q_politeness_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F-G token-bucket capacity table: floor(round_seconds/delay) ×
-    concurrency, robots crawl_delay overriding the politeness delay."""
+    concurrency, a positive robots crawl_delay overriding the
+    politeness delay."""
     from crawlspark.politeness import capacity_df
 
     pol = _t(spark, sf_dir, "nation").select(
@@ -300,7 +301,9 @@ def sql_politeness_capacity() -> str:
     ),
     rob AS (SELECT r_name AS host, (r_regionkey + 2)::DOUBLE AS crawl_delay FROM region)
     SELECT COALESCE(pol.host, rob.host) AS host,
-           (floor(600.0 / COALESCE(rob.crawl_delay, pol.delay_s, 1.0))
+           (floor(600.0 / COALESCE(CASE WHEN rob.crawl_delay > 0
+                                        THEN rob.crawl_delay END,
+                                   pol.delay_s, 1.0))
              * COALESCE(pol.conc, 2))::BIGINT AS capacity
     FROM pol FULL OUTER JOIN rob ON pol.host = rob.host"""
 

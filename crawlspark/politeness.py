@@ -8,19 +8,22 @@ The engine replaces sleeping with a per-host **token-bucket budget**:
     capacity(host) = floor(round_seconds / delay) * max_concurrency
     delay = robots.crawl_delay ?? politeness.delay_s ?? DEFAULT_DELAY_S
 
-enforced by a window rank over host (frontier pop, F-H). Robots rules
-are longest-prefix-match allow/deny evaluated as pure Column
-expressions over the rules array — no UDF.
+enforced by a window rank over host (frontier pop, F-H). A
+non-positive ``crawl_delay`` (``Crawl-delay: 0``) counts as absent.
+Robots rules are longest-prefix-match allow/deny evaluated as pure
+Column expressions over the rules array — no UDF.
 
 Scale notes (10^10 frontier):
 * robots/politeness are per-host dims — broadcast them (they're
   filtered to the hosts present in the candidate batch first when the
   dim itself is huge).
 * the window over ``host`` is the skew hazard: a hot host with 10^8
-  pending candidates would funnel into one task. ``pop_per_host`` is
-  two-stage: a salted local rank prunes each host to at most
-  ``capacity`` rows *per salt shard* before the exact global rank, so
-  the final window input per host is ≤ capacity × n_salts rows.
+  pending candidates would funnel into one task. ``pop_per_host`` ranks
+  only the contended hosts (pending > remaining), two-stage: a salted
+  local rank prunes each host to at most ``capacity`` rows *per salt
+  shard* before the exact global rank, so the final window input per
+  host is ≤ capacity × n_salts rows. A batch with no contended host
+  plans no window at all.
 """
 
 from __future__ import annotations
@@ -62,7 +65,8 @@ def capacity_df(
     pol = politeness.select("host", "delay_s", "max_concurrency")
     rob = robots.select("host", "crawl_delay")
     joined = pol.join(rob, "host", "full_outer")
-    delay = F.coalesce("crawl_delay", "delay_s", F.lit(DEFAULT_DELAY_S))
+    crawl_delay = F.when(F.col("crawl_delay") > 0, F.col("crawl_delay"))
+    delay = F.coalesce(crawl_delay, "delay_s", F.lit(DEFAULT_DELAY_S))
     conc = F.coalesce("max_concurrency", F.lit(DEFAULT_CONCURRENCY))
     return joined.select(
         "host",
@@ -74,6 +78,28 @@ def capacity_df(
 
 def default_capacity(round_seconds: float) -> int:
     return int(round_seconds / DEFAULT_DELAY_S) * DEFAULT_CONCURRENCY
+
+
+def capacity_map(
+    politeness: list[dict], robots: list[dict], round_seconds: float
+) -> dict[str, int]:
+    """``capacity_df`` as a driver-side ``{host: capacity}`` dict built
+    from the same per-host rows. A host in neither list is absent; its
+    capacity is ``default_capacity``."""
+    pol = {p["host"]: p for p in politeness}
+    delays = {r["host"]: r.get("crawl_delay") for r in robots}
+    out = {}
+    for host in pol.keys() | delays.keys():
+        crawl_delay = delays.get(host)
+        p = pol.get(host, {})
+        delay = (
+            crawl_delay
+            if crawl_delay and crawl_delay > 0
+            else p.get("delay_s", DEFAULT_DELAY_S)
+        )
+        conc = p.get("max_concurrency", DEFAULT_CONCURRENCY)
+        out[host] = int(round_seconds / delay) * conc
+    return out
 
 
 def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
@@ -100,11 +126,14 @@ def pop_per_host(
     ``default_remaining``. Returns candidates + ``popped`` boolean.
 
     Skew design (10^10 frontier, Zipf hosts):
-    1. **Uncontended fast path** — a per-host count (map-side-combined
-       agg: skew-immune) decides which hosts have pending ≤ remaining.
-       Their rows ALL pop — no window, no sort. This is the common
-       case and costs one agg + one small semi-join.
-    2. **Contended hosts only** go through the two-stage rank: stage 1
+    1. **Contended hosts** — one per-host count (map-side-combined agg:
+       skew-immune) finds the hosts with pending > remaining and
+       collects them to the driver (a small set: the
+       politeness-throttled hot hosts). Every other host's rows all
+       pop — no window, no sort.
+    2. **No contended host** (the common case): the candidates return
+       with ``popped = True`` and no window is planned at all.
+    3. **Contended hosts only** go through the two-stage rank: stage 1
        ranks within (host, salt) — parallel across shards — and
        discards rows that cannot be in the host's top-``remaining``;
        stage 2 ranks exactly on the pruned set, whose size is bounded
@@ -125,13 +154,20 @@ def pop_per_host(
     )
     if owner is not None:
         owner.append(cand)
-    # hosts whose pending count exceeds their budget (small set: the
-    # politeness-throttled hot hosts)
-    contended_hosts = F.broadcast(
-        cand.groupBy("host")
+    contended = [
+        r["host"]
+        for r in cand.groupBy("host")
         .agg(F.count("*").alias("_cnt"), F.first("remaining").alias("_rem"))
         .filter(F.col("_cnt") > F.col("_rem"))
         .select("host")
+        .collect()
+    ]
+    if not contended:
+        return cand.withColumn("popped", F.lit(True)).drop("remaining")
+    contended_hosts = F.broadcast(
+        candidates.sparkSession.createDataFrame(
+            [(h,) for h in contended], "host string"
+        )
     )
     easy = (
         cand.join(contended_hosts, "host", "left_anti")

@@ -1,5 +1,7 @@
-"""The crawl engine: one scheduling round = one Spark job chain + one
-atomic snapshot commit (SURVEY §3.1 "Spark restatement").
+"""The crawl engine: one scheduling round = a short chain of Spark jobs
+ending in six snapshot commits (five with the exact seen filter),
+``crawl_log`` last as the round's commit marker (SURVEY §3.1 "Spark
+restatement").
 
 Round pipeline
 --------------
@@ -18,18 +20,25 @@ Round pipeline
 3. **Dedup** (F-C/F-D): canonicalize (Arrow UDF) → in-batch keep-first
    by discovery key (window) → bloom probe + exact left_anti vs seen.
 4. **Robots + politeness pop** (F-G/F-H): longest-prefix robots rules,
-   then the two-stage salted window rank caps fetches per host at the
-   token-bucket capacity.
+   then the pop caps fetches per host at the token-bucket capacity
+   minus the round's search fetches. Capacities are a driver-side
+   ``{host: capacity}`` map, so the remaining budget is a small local
+   relation; only hosts with more pending rows than budget go through
+   the two-stage salted window rank. The pop result is persisted once
+   and feeds both the fetch and the frontier commit.
 5. **Fetch**: popped rows join the pages table ("fetch" — the sandbox
    stand-in for HTTP). Small popped sets broadcast against the scan so
    the 100 TB side never shuffles.
 6. **Extract** (E1-E6): parse pandas UDF → byte-identical
    ``combination_text``; CareerOne pages are `from_json` + explode.
-7. **Commit** (M5): extracted/crawl_log append, seen/frontier/
-   job_metadata snapshot overwrite, each with per-partition lineage +
-   counters; ``crawl_log`` commits LAST and is the round's commit
-   marker — resume replays any round whose marker is missing, reading
-   every table as-of the last complete round.
+7. **Commit** (M5): the snapshot commits — ``extracted`` (append),
+   ``job_metadata`` (bucketed merge), ``seen`` (append), the seen
+   filter (``seen_bloom`` or ``seen_cuckoo``; none for the exact
+   filter), ``frontier`` (overwrite) and ``crawl_log`` (append) —
+   with per-partition lineage + counters. The fetch count is the sum
+   of the lineage rows. ``crawl_log`` commits LAST and is the round's
+   commit marker — resume replays any round whose marker is missing,
+   reading every table as-of the last complete round.
 """
 
 from __future__ import annotations
@@ -46,7 +55,7 @@ from crawlspark.parsers.udfs import careerone_jobs_col, parse_detail_udf
 from crawlspark.politeness import (
     DISCOVERY_KEY,
     apply_robots,
-    capacity_df,
+    capacity_map,
     default_capacity,
     pop_per_host,
 )
@@ -101,12 +110,7 @@ class CrawlEngine:
         self.seeds_by_site = {
             s: [d for d in seeds if d["site"] == s] for s in SITE_ORDER
         }
-        self.politeness_rows = politeness
         self.robots_rows = robots
-        self.politeness_df = spark.createDataFrame(
-            [(p["host"], p["delay_s"], p["max_concurrency"]) for p in politeness],
-            "host string, delay_s double, max_concurrency int",
-        )
         self.robots_df = spark.createDataFrame(
             [
                 (
@@ -144,9 +148,10 @@ class CrawlEngine:
             .select("url", "warc_ts", "html")
             .cache()
         )
-        self._capacity = capacity_df(
-            self.politeness_df, self.robots_df, round_seconds
-        )
+        # per-host budgets live on the driver: the same rows already sit
+        # here as Python lists, so a round's remaining budget is a small
+        # local relation, not a join over the politeness/robots dims
+        self._capacity_by_host = capacity_map(politeness, robots, round_seconds)
         self._default_capacity = default_capacity(round_seconds)
 
     # ------------------------------------------------------------------
@@ -188,17 +193,7 @@ class CrawlEngine:
         return html
 
     def _capacity_of(self, host: str) -> int:
-        rob = self._robots_by_host.get(host, {})
-        pol = next(
-            (p for p in self.politeness_rows if p["host"] == host), None
-        )
-        from crawlspark.politeness import DEFAULT_CONCURRENCY, DEFAULT_DELAY_S
-
-        delay = rob.get("crawl_delay") or (
-            pol["delay_s"] if pol else DEFAULT_DELAY_S
-        )
-        conc = pol["max_concurrency"] if pol else DEFAULT_CONCURRENCY
-        return int(self.round_seconds / delay) * conc
+        return self._capacity_by_host.get(host, self._default_capacity)
 
     def _allowed(self, url: str) -> bool:
         rob = self._robots_by_host.get(host_of(url))
@@ -316,29 +311,27 @@ class CrawlEngine:
         n_blocked = gated.filter(~F.col("allowed")).count()
 
         # ---- politeness pop (F-G/F-H) ----
-        used_df = self.spark.createDataFrame(
-            list(used.items()) or [("", 0)], "host string, used long"
+        # remaining budget = capacity − this round's search fetches, as
+        # a local relation over the hosts with a known capacity or use
+        remaining = self.spark.createDataFrame(
+            [
+                (h, self._capacity_of(h) - used.get(h, 0))
+                for h in self._capacity_by_host.keys() | used.keys()
+            ],
+            "host string, remaining long",
         )
-        remaining = (
-            self._capacity.join(used_df, "host", "full_outer")
-            .select(
-                "host",
-                (
-                    F.coalesce("capacity", F.lit(self._default_capacity))
-                    - F.coalesce("used", F.lit(0))
-                ).alias("remaining"),
-            )
-        )
+        # persisted once: the fetch and the frontier commit both read
+        # the pop result, which would otherwise re-run the pop plan
         popped_all = pop_per_host(
             allowed,
             remaining,
             salt_shards=self.salt_shards,
             default_remaining=self._default_capacity,
             owner=round_persists,
-        )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        round_persists.append(popped_all)
         to_fetch = popped_all.filter(F.col("popped")).drop("popped")
         pending = popped_all.filter(~F.col("popped")).drop("popped")
-        to_fetch.cache()
         n_popped = to_fetch.count()
 
         # ---- fetch: join vs pages without shuffling the big side ----
@@ -367,7 +360,6 @@ class CrawlEngine:
             F.col("_p.listed_date_raw").alias("listed_date_raw"),
         )
         parsed = parsed.cache()
-        n_fetched = parsed.count()
 
         failed = to_fetch.join(
             F.broadcast(hit.select("url")), "url", "left_anti"
@@ -389,6 +381,8 @@ class CrawlEngine:
         )
 
         # ---- per-partition lineage for the fetch stage (M5) ----
+        # one action: it materializes ``parsed``, and its row counts
+        # sum to the fetch count
         lineage = [
             {"round": rnd, "stage": "fetch", "partition": int(r["pid"]),
              "rows": int(r["cnt"])}
@@ -396,6 +390,7 @@ class CrawlEngine:
             .agg(F.count("*").alias("cnt"))
             .collect()
         ]
+        n_fetched = sum(e["rows"] for e in lineage)
 
         # ---- commits (crawl_log last = round commit marker) ----
         seen_new = seen.unionByName(
@@ -498,7 +493,6 @@ class CrawlEngine:
             counters=counters,
             lineage=lineage,
         )
-        to_fetch.unpersist()
         hit.unpersist()
         parsed.unpersist()
         for df in round_persists:

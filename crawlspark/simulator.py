@@ -22,7 +22,8 @@ and identical URL-seen set):
   successfully fetched *detail* URLs (it models Postgres job_metadata).
 * Politeness (F-G/F-H): per-host budget =
   ``floor(round_seconds / delay) * max_concurrency``; delay =
-  robots crawl_delay override else politeness delay else default.
+  robots crawl_delay override (when positive) else politeness delay
+  else default.
 * Robots: longest-prefix rule; disallowed candidates are dropped
   permanently (status blocked).
 * Retries (F-K): a fetch attempt with no page consumes budget and
@@ -103,7 +104,12 @@ class ReferenceSimulator:
     def capacity(self, host: str) -> int:
         pol = self.politeness.get(host, {})
         rob = self.robots.get(host, {})
-        delay = rob.get("crawl_delay") or pol.get("delay_s", DEFAULT_DELAY_S)
+        crawl_delay = rob.get("crawl_delay")
+        delay = (
+            crawl_delay
+            if crawl_delay and crawl_delay > 0
+            else pol.get("delay_s", DEFAULT_DELAY_S)
+        )
         conc = pol.get("max_concurrency", DEFAULT_CONCURRENCY)
         return int(self.round_seconds / delay) * conc
 

@@ -7,7 +7,8 @@ the full 50-query matrix locally before the driver does.
 
 Usage: python jobs/correctness_check.py [--sf-dir /root/testdata/sf0.01]
        [--only q1,q2,...]
-Prints one JSON line per query plus a summary; exit 1 on any mismatch.
+Prints one JSON line per query plus a summary; exit 1 on any mismatch,
+or when no query ran (e.g. ``--only`` matched no query name).
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ import json
 import math
 import os
 import sys
+
+from pyspark.sql import Row
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -39,6 +42,8 @@ def _norm_cell(v) -> str:
         return "true" if v else "false"
     if isinstance(v, bytes):
         return v.hex()
+    if isinstance(v, Row):  # a struct: hash like DuckDB's dict
+        v = v.asDict()
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(_norm_cell(x) for x in v) + "]"
     if isinstance(v, dict):
@@ -117,7 +122,7 @@ def main() -> None:
         if r["rows_match"] and r["schema_match"] and r["hash_match"]
     )
     print(json.dumps({"summary": f"{n_ok}/{len(results)} pass"}))
-    sys.exit(0 if n_ok == len(results) else 1)
+    sys.exit(0 if results and n_ok == len(results) else 1)
 
 
 if __name__ == "__main__":

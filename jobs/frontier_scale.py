@@ -157,8 +157,11 @@ def main() -> None:
     budget = fresh.select("host").distinct().select(
         "host", F.lit(BUDGET_PER_HOST).alias("remaining")
     )
+    # the call itself runs the per-host count that finds the contended
+    # hosts, so it is timed with the forced result
+    t0 = time.perf_counter()
     popped = pop_per_host(fresh, budget, salt_shards=16, owner=owned)
-    stages["pop"] = force(popped.filter(F.col("popped")))
+    stages["pop"] = time.perf_counter() - t0 + force(popped.filter(F.col("popped")))
     n_popped = popped.filter(F.col("popped")).count()
 
     for df in owned:

@@ -4,12 +4,14 @@ frontier pop vs a naive single-window oracle (SURVEY F-G/F-H)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from crawlspark.politeness import (
     DISCOVERY_KEY,
     capacity_df,
+    capacity_map,
     pop_per_host,
     robots_allowed,
 )
@@ -49,16 +51,64 @@ def test_robots_column_matches_pure(spark):
 
 
 def test_capacity(spark):
+    pol_rows = [
+        ("a.example", 5.0, 4), ("b.example", 3.0, 2), ("d.example", 5.0, 4),
+    ]
+    rob_rows = [
+        ("a.example", 2.0), ("c.example", 10.0),
+        # Crawl-delay: 0 / a negative delay count as absent
+        ("d.example", 0.0), ("e.example", -1.0),
+    ]
     pol = spark.createDataFrame(
-        [("a.example", 5.0, 4), ("b.example", 3.0, 2)],
-        "host string, delay_s double, max_concurrency int",
+        pol_rows, "host string, delay_s double, max_concurrency int"
     )
-    rob = spark.createDataFrame(
-        [("a.example", 2.0), ("c.example", 10.0)], "host string, crawl_delay double"
-    )
+    rob = spark.createDataFrame(rob_rows, "host string, crawl_delay double")
     got = {r["host"]: r["capacity"] for r in capacity_df(pol, rob, 600.0).collect()}
     # crawl_delay overrides delay_s; defaults: delay 1s, concurrency 2
-    assert got == {"a.example": 300 * 4, "b.example": 200 * 2, "c.example": 60 * 2}
+    want = {
+        "a.example": 300 * 4, "b.example": 200 * 2, "c.example": 60 * 2,
+        "d.example": 120 * 4, "e.example": 600 * 2,
+    }
+    assert got == want
+    # the driver-side map the engine budgets with agrees
+    assert capacity_map(
+        [dict(host=h, delay_s=d, max_concurrency=c) for h, d, c in pol_rows],
+        [dict(host=h, crawl_delay=d) for h, d in rob_rows],
+        600.0,
+    ) == want
+
+
+POP_SCHEMA = "host string, disc_round int, seed_idx int, depth int, link_idx int"
+
+
+def _pop_key(r):
+    return (r["host"], r["disc_round"], r["seed_idx"], r["depth"], r["link_idx"])
+
+
+def _assert_pop_matches_naive(cand, budget, default_remaining, salt_shards):
+    """pop_per_host == one global window per host: the same popped
+    set, every candidate returned exactly once, every cap respected."""
+    got = pop_per_host(
+        cand, budget, salt_shards=salt_shards, default_remaining=default_remaining
+    )
+    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in DISCOVERY_KEY])
+    naive = (
+        cand.join(budget, "host", "left")
+        .withColumn("remaining", F.coalesce("remaining", F.lit(default_remaining)))
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("popped", F.col("_rn") <= F.col("remaining"))
+    )
+    rows = got.collect()
+    assert sorted(_pop_key(r) for r in rows) == sorted(
+        _pop_key(r) for r in cand.collect()
+    )
+    assert {_pop_key(r) for r in rows if r["popped"]} == {
+        _pop_key(r) for r in naive.filter("popped").collect()
+    }
+    caps = {r["host"]: r["remaining"] for r in budget.collect()}
+    for r in got.filter("popped").groupBy("host").count().collect():
+        assert r["count"] <= caps.get(r["host"], default_remaining), r["host"]
+    return rows
 
 
 def _skewed_candidates(spark, n_hot=5_000, n_cold_hosts=50):
@@ -139,25 +189,25 @@ def test_pop_per_host_random_budgets_vs_naive(spark):
         elif case == 4:
             budgets.append((host, rng.randrange(1, n + 1)))
         # case 5: absent from budget — default_remaining applies
-    cand = spark.createDataFrame(
-        rows, "host string, disc_round int, seed_idx int, depth int, link_idx int"
-    )
+    cand = spark.createDataFrame(rows, POP_SCHEMA)
     budget = spark.createDataFrame(budgets, "host string, remaining long")
+    _assert_pop_matches_naive(cand, budget, 2, salt_shards=4)
 
-    got = pop_per_host(cand, budget, salt_shards=4, default_remaining=2)
 
-    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in DISCOVERY_KEY])
-    naive = (
-        cand.join(budget, "host", "left")
-        .withColumn("remaining", F.coalesce("remaining", F.lit(2)))
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("popped", F.col("_rn") <= F.col("remaining"))
+@pytest.mark.parametrize("case", ["all_under_budget", "empty"])
+def test_pop_per_host_uncontended_vs_naive(spark, case):
+    """No contended host: the pop returns every candidate popped
+    without planning a window — still exactly the naive oracle."""
+    rows = []
+    if case == "all_under_budget":
+        for h in range(6):
+            for i in range(h + 1):  # host h has h + 1 candidates
+                rows.append((f"h{h}.example", 0, i % 3, i % 2, 10 * h + i))
+    cand = spark.createDataFrame(rows, POP_SCHEMA)
+    # budgets at the count (tight), above it, and the default for h5
+    budget = spark.createDataFrame(
+        [(f"h{h}.example", h + 1 + h % 2) for h in range(5)],
+        "host string, remaining long",
     )
-    key = lambda r: (r["host"], r["disc_round"], r["seed_idx"], r["depth"], r["link_idx"])  # noqa: E731
-    assert {key(r) for r in got.filter("popped").collect()} == {
-        key(r) for r in naive.filter("popped").collect()
-    }
-    assert got.count() == len(rows)
-    caps = dict(budgets)
-    for r in got.filter("popped").groupBy("host").count().collect():
-        assert r["count"] <= caps.get(r["host"], 2), r["host"]
+    got = _assert_pop_matches_naive(cand, budget, 6, salt_shards=4)
+    assert all(r["popped"] for r in got)

@@ -151,3 +151,50 @@ def test_persist_lifecycle_no_growth(spark, tiny_pages):
     _engine(spark, tiny_pages, 600.0)
     after = jsc.getPersistentRDDs().size()
     assert after - before <= 1, f"persisted RDDs grew {before} -> {after}"
+
+
+def test_zero_crawl_delay_matches_simulator(spark, tiny_pages):
+    """``Crawl-delay: 0`` counts as absent: jora falls back to its
+    politeness delay (floor(60/10)*4 = 24 per round, so the budget
+    binds) and the engine's round still matches the simulator."""
+    robots = [
+        dict(r, crawl_delay=0.0) if r["host"] == "au.jora.com" else r
+        for r in robots_rows(42, "tiny")
+    ]
+    sim = ReferenceSimulator(
+        {r["url"]: r["html"] for r in gen_pages_rows(42, "tiny")},
+        gen_seeds("tiny"), politeness_rows(), robots, round_seconds=60.0,
+    )
+    sim.run(1)
+    cat = SnapshotCatalog(tempfile.mkdtemp(), spark)
+    CrawlEngine(
+        spark, cat, tiny_pages, gen_seeds("tiny"), politeness_rows(), robots,
+        round_seconds=60.0,
+    ).run(1, resume=False)
+    assert {r["url_canon"] for r in cat.read("seen").collect()} == sim.state.seen
+    assert _engine_log(cat) == _sim_log(sim)
+
+
+def test_round_spark_job_budget(spark, tiny_pages):
+    """Guard against a recompute creeping back into the round: the
+    pop result is persisted once, the host budgets are driver-side and
+    the fetch count comes from the lineage aggregate, so the first
+    round of the tiny fixture launches at most 34 Spark jobs and a warm
+    round at most 47."""
+    sc = spark.sparkContext
+    cat = SnapshotCatalog(tempfile.mkdtemp(), spark)
+    eng = CrawlEngine(
+        spark, cat, tiny_pages, gen_seeds("tiny"), politeness_rows(),
+        robots_rows(42, "tiny"), round_seconds=600.0,
+    )
+    jobs = []
+    for rnd in range(2):
+        group = f"job-budget-round-{rnd}"
+        sc.setJobGroup(group, group)
+        try:
+            eng.run_round(rnd)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] <= 34, jobs
+    assert jobs[1] <= 47, jobs
